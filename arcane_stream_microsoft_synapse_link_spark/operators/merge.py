@@ -40,7 +40,7 @@ inserted rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .dedup import latest_by_version
@@ -88,17 +88,21 @@ def cdc_merge(
     key: str = "arcane_merge_key",
     version_col: str = "versionnumber",
     is_delete_col: str = "IsDelete",
-    dedup_staged: bool = True,
     allow_schema_evolution: bool = True,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Merge a staged change batch into the target; returns the new target.
+    ``target=None`` is an overwrite: the deduplicated batch minus deletes.
 
     ``allow_schema_evolution=False`` is the reference's
     ``staging.table.isUnifiedSchema: true`` (crd-microsoft-synapse.yaml:82-85):
     schema migration between stage and target is disabled, so a column-set
-    mismatch is an error instead of an auto-ADD/null-fill."""
-    if dedup_staged:
-        staged = latest_by_version(staged, key=key, version_col=version_col)
+    mismatch is an error instead of an auto-ADD/null-fill.
+
+    ``observation`` reports, as ``merged``, the count of rows that take
+    effect (the version-guarded rows; into no target, the inserts). The
+    action that executes the returned frame fills it."""
+    staged = latest_by_version(staged, key=key, version_col=version_col)
 
     is_delete = (
         F.coalesce(F.col(is_delete_col), F.lit(False))
@@ -106,8 +110,13 @@ def cdc_merge(
         else F.lit(False)
     )
 
+    def observed(df: DataFrame) -> DataFrame:
+        if observation is None:
+            return df
+        return df.observe(observation, F.count(F.lit(1)).alias("merged"))
+
     if target is None:
-        return staged.where(~is_delete)
+        return observed(staged.where(~is_delete))
 
     if not allow_schema_evolution:
         t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
@@ -130,6 +139,7 @@ def cdc_merge(
         effective = guarded.drop("__k", "__tgt_v")
     else:
         effective = staged  # no version columns → last-write-wins
+    effective = observed(effective)
 
     upserts = effective.where(~is_delete)
     touched_keys = effective.select(key)

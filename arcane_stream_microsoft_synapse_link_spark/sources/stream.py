@@ -211,30 +211,28 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
         # padded) or lead (extra attrs dropped until a stream restart picks
         # up the widened schema, the Spark file-source evolution contract)
         self._query_columns = query_columns
-        # Progress known to THIS reader instance: set by initialOffset (fresh
-        # stream) and commit (each finished batch). After a checkpoint
-        # restart it is None until the first commit — the API does not hand
-        # the reader the restored offset — so the first trigger is uncapped
-        # (a restart burst), then steady-state admission capping resumes.
-        self._known_progress: str | None = None
+        # The last offset this reader handed out. Spark plans each batch as
+        # (previous latestOffset, new latestOffset], so admission caps count
+        # from here, and it never moves back. None until the first call: a
+        # fresh or restarted query's first trigger is uncapped (a burst), as
+        # the API hands the reader no start offset before it.
+        self._frontier: str | None = None
 
     # -- offsets (A1): folder-name frontier from the changelog pointer ----
     def initialOffset(self) -> dict:
-        self._known_progress = ""
         return {"folder": ""}
 
     def latestOffset(self) -> dict:
         """Frontier = changelog pointer, optionally admission-capped to N
-        folders past known progress (operator B18, the static throughput
-        shaper — the maxFilesPerTrigger idiom for this source)."""
-        head = self._source.changelog_head()
-        if head and self._max_folders > 0 and self._known_progress is not None:
-            pend = self._source.list_folders(after=self._known_progress or None, up_to=head)
+        folders past the previous frontier (operator B18, the static
+        throughput shaper — the maxFilesPerTrigger idiom for this source)."""
+        head = self._source.changelog_head() or ""
+        if head and self._max_folders > 0 and self._frontier is not None:
+            pend = self._source.list_folders(after=self._frontier or None, up_to=head)
             if len(pend) > self._max_folders:
                 head = pend[self._max_folders - 1].name
-        if head and self._known_progress:
-            head = max(head, self._known_progress)  # never regress the frontier
-        return {"folder": head or ""}
+        self._frontier = max(head, self._frontier or "")
+        return {"folder": self._frontier}
 
     # -- planning (A2/B5): folders in (start, end], one partition per CSV --
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -486,13 +484,6 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
             if rows:
                 yield self._rows_to_batch(rows, fields, partition.folder)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the checkpoint; sink-side watermark is B11.
-        # Track committed progress so admission capping stays relative.
-        f = end.get("folder") or ""
-        if f and (self._known_progress is None or f > self._known_progress):
-            self._known_progress = f
-
 
 class SynapseLinkDataSource(DataSource):
     """``spark.readStream.format("synapse_link").option("path", root)
@@ -523,7 +514,7 @@ class SynapseLinkDataSource(DataSource):
             entity_obj = model[entity]
         schema = entity_obj.typed_schema()
         # provenance column: which batch folder (source version) each row
-        # came from — lets the sink commit a B11 watermark per micro-batch
+        # came from (the CDC sink takes its watermark from the end offset)
         return schema.add("_batch_folder", "string", nullable=False)
 
     def streamReader(self, schema: StructType) -> SynapseLinkStreamReader:

@@ -3,14 +3,16 @@
 The reference carries an ``observability`` config block (metric tags →
 Datadog sidecar, stream-context-serialized-example.json; CRD
 ``spec.observability``). The Spark-native equivalent is (a) a small
-per-batch metrics recorder the runner feeds (rows, wall seconds, rows/s —
-the numbers the reference's advisedRate throughput contract is stated in),
+per-batch metrics recorder the runner feeds (rows in, rows merged, wall
+seconds, rows/s — the numbers the reference's advisedRate throughput
+contract is stated in),
 persisted as JSONL so any scraper can tail it, and (b) a
 ``StreamingQueryListener`` that captures Structured Streaming progress
 events (batch duration, input rows) for the readStream path.
 
 No driver-side aggregation of data rows happens here — metrics are O(1)
-per batch regardless of batch size.
+per batch regardless of batch size, and the runner observes its counts
+inside the commit job, so recording starts no Spark job.
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from dataclasses import asdict, dataclass, field
 @dataclass
 class BatchMetric:
     batch_folder: str
-    rows: int
+    rows: int  # change rows in the batch
+    merged: int  # rows that took effect past the version guard
     seconds: float
     rows_per_sec: float
     wall_ts: float
@@ -110,10 +113,11 @@ class MetricsRecorder:
         self.metrics: list[BatchMetric] = []
         self.statsd = StatsdPublisher(statsd_address, self.tags) if statsd_address else None
 
-    def record(self, batch_folder: str, rows: int, seconds: float) -> BatchMetric:
+    def record(self, batch_folder: str, rows: int, merged: int, seconds: float) -> BatchMetric:
         m = BatchMetric(
             batch_folder=batch_folder,
             rows=rows,
+            merged=merged,
             seconds=round(seconds, 6),
             rows_per_sec=round(rows / seconds, 3) if seconds > 0 else 0.0,
             wall_ts=time.time(),
@@ -125,9 +129,9 @@ class MetricsRecorder:
             with open(self.path, "a") as fh:
                 fh.write(json.dumps(asdict(m)) + "\n")
         if self.statsd is not None:
-            # one merged batch → rows-in count, rows-merged count, duration
+            # one applied batch → rows-in count, rows-merged count, duration
             self.statsd.count(METRIC_ROWS_INCOMING, rows)
-            self.statsd.count(METRIC_ROWS_MERGED, rows)
+            self.statsd.count(METRIC_ROWS_MERGED, merged)
             self.statsd.timing_ms(METRIC_BATCH_DURATION, seconds * 1000.0)
         return m
 

@@ -7,15 +7,15 @@ The Spark rewrite of the reference's ZIO pipeline (SURVEY.md §3.1-3.2):
     → dedup latest (B8) → CDC merge (B9) + schema evolution (B10)
     → commit snapshot → watermark (B11) → maintenance cadence (C1-C4)
 
-Each batch folder is processed atomically: the snapshot commit lands
-before the watermark advances, and the merge is idempotent (dedup makes
-re-merge a no-op), so a crash between commit and watermark replays one
-folder harmlessly — the exactly-once contract of the reference
-(stage→merge→watermark order, StreamRunner.scala:198-233).
+Every caller — tick, row-grouped tick, readStream micro-batch, both
+backfills — applies a batch through ``StreamRunner.apply_change_batch``:
+the commit lands before the watermark advances and the merge is
+idempotent, so a crash between them replays one batch harmlessly — the
+reference's exactly-once order (StreamRunner.scala:198-233).
 
 Backfill (B13-B17): full-history replay from ``backfill_start`` with
-``Overwrite`` (CREATE OR REPLACE analog) or ``Merge`` finalization
-(docs/backfill.md:27-47).
+``Overwrite`` (CREATE OR REPLACE analog: a merge into no target) or
+``Merge`` finalization (docs/backfill.md:27-47).
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..operators.dedup import latest_by_version
 from ..operators.merge import cdc_merge
@@ -123,6 +123,15 @@ class StreamSpec:
     # (sources/objectstore.py); for abfss:// roots the same block maps to
     # fs.azure.* conf via azure_hadoop_conf and this field stays None.
     storage_connection: dict | None = None
+
+
+@dataclass(frozen=True)
+class BatchOutcome:
+    """What one applied change batch did, observed in its commit job."""
+
+    rows: int  # incoming change rows
+    merged: int  # rows that took effect past the version guard
+    table_rows: int  # rows committed (the whole table unless bucket-incremental)
 
 
 @dataclass
@@ -256,63 +265,64 @@ class StreamRunner:
         # them keeps null-key garbage out of the dedup window
         return df.where(F.col("arcane_merge_key").isNotNull())
 
-    def _target(self) -> DataFrame | None:
-        return self.table.read(self.spark) if self.table.exists() else None
+    # ---- the change-batch apply path (B9 → B11 → C1-C4) -------------------
+    def apply_change_batch(
+        self, df: DataFrame, up_to: str, is_backfill: bool = False
+    ) -> BatchOutcome:
+        """prepare → version-guarded ``cdc_merge`` → snapshot commit →
+        watermark ``up_to`` → metrics → maintenance. The retried unit is
+        prepare+merge+commit (replay-safe: the merge is idempotent); the
+        outcome's counts are observed in the commit job, no extra action.
 
-    def _drop_deletes(self, df: DataFrame) -> DataFrame:
-        """Filter delete rows before an Overwrite finalize; entities
-        without an IsDelete column (cdc_merge also guards for its
-        absence) pass through unchanged."""
+        ``is_backfill``: ``Overwrite`` merges into no target, ``Merge``
+        into the live one; ``backfillOnly`` retries apply, and the batch
+        does not count toward the maintenance cadence."""
         from pyspark.sql import functions as F
 
-        if self.spec.is_delete_column not in df.columns:
-            return df
-        return df.where(~F.coalesce(F.col(self.spec.is_delete_column), F.lit(False)))
-
-    def _merge_folder_batch(
-        self, df: DataFrame, up_to_folder: str, is_backfill: bool = False
-    ) -> None:
         t0 = time.time()
 
-        def merge_and_commit() -> None:
-            # the retried unit is merge+commit — safe to replay because the
-            # version-guarded merge is idempotent (re-merge is a no-op)
-            from pyspark.sql import functions as F
-
-            staged = self._prepare(df)
-            if self.table.bucket_count and self.table.exists():
+        def merge_and_commit() -> BatchOutcome:
+            # an Observation reports the first action it sees: one per attempt
+            incoming, effective, committed = Observation(), Observation(), Observation()
+            staged = self._prepare(df.observe(incoming, F.count(F.lit(1)).alias("n")))
+            target = touched = None
+            if self.table.exists() and not (
+                is_backfill and self.spec.backfill_behavior == "Overwrite"
+            ):
+                # in the batch's session: a readStream micro-batch runs in
+                # the query's cloned session, and an Observation is reported
+                # only by a job of the session it was attached in
+                target = self.table.read(df.sparkSession)
+            if target is not None and self.table.bucket_count and not is_backfill:
                 # incremental path: merge into ONLY the buckets the batch
                 # touches (partition-pruned target read); untouched buckets
                 # are hard-linked forward by commit — at 100 TB the merge
                 # cost follows the change set, not the table
                 staged = staged.withColumn("__bucket", self.table.bucket_expr())
                 touched = [r[0] for r in staged.select("__bucket").distinct().collect()]
-                target = self._target().where(F.col("__bucket").isin(touched))
-                merged = cdc_merge(
-                    target,
-                    staged,
-                    version_col=self.spec.version_column,
-                    is_delete_col=self.spec.is_delete_column,
-                    allow_schema_evolution=not self.spec.is_unified_schema,
-                )
-                self.table.commit(merged, touched_buckets=touched)
-            else:
-                merged = cdc_merge(
-                    self._target(),
-                    staged,
-                    version_col=self.spec.version_column,
-                    is_delete_col=self.spec.is_delete_column,
-                    allow_schema_evolution=not self.spec.is_unified_schema,
-                )
-                self.table.commit(merged)
+                target = target.where(F.col("__bucket").isin(touched))
+            merged = cdc_merge(
+                target,
+                staged,
+                version_col=self.spec.version_column,
+                is_delete_col=self.spec.is_delete_column,
+                allow_schema_evolution=not self.spec.is_unified_schema,
+                observation=effective,
+            )
+            self.table.commit(
+                merged.observe(committed, F.count(F.lit(1)).alias("n")),
+                touched_buckets=touched,
+            )
+            return BatchOutcome(incoming.get["n"], effective.get["merged"], committed.get["n"])
 
-        with_retry(merge_and_commit, self.spec.retry, is_backfill=is_backfill)
-        self.table.set_watermark(up_to_folder)  # commit THEN watermark
-        self.stats.batches_merged += 1
+        out = with_retry(merge_and_commit, self.spec.retry, is_backfill=is_backfill)
+        self.table.set_watermark(up_to)  # commit THEN watermark
         if self.spec.metrics_path or self.spec.statsd_address:
-            # opt-in: rows count is an extra action, only paid when metrics on
-            self.metrics.record(up_to_folder, df.count(), time.time() - t0)
-        self._maintenance()
+            self.metrics.record(up_to, out.rows, out.merged, time.time() - t0)
+        if not is_backfill:
+            self.stats.batches_merged += 1
+            self._maintenance()
+        return out
 
     # ---- backfill (B13-B17) ------------------------------------------------
     def backfill(self) -> int:
@@ -324,28 +334,7 @@ class StreamRunner:
         df = self.source.read_folders(self.spark, folders)
         if df is None:
             return 0
-        staged = latest_by_version(
-            self._prepare(df), version_col=self.spec.version_column
-        )
-        def finalize() -> None:
-            if self.spec.backfill_behavior == "Overwrite":
-                # drop deletes; atomic snapshot replace (B15)
-                self.table.commit(self._drop_deletes(staged))
-            else:  # Merge (B16) — non-destructive fold into live target
-                self.table.commit(
-                    cdc_merge(
-                        self._target(),
-                        staged,
-                        version_col=self.spec.version_column,
-                        is_delete_col=self.spec.is_delete_column,
-                        allow_schema_evolution=not self.spec.is_unified_schema,
-                        dedup_staged=False,
-                    )
-                )
-
-        with_retry(finalize, self.spec.retry, is_backfill=True)
-        self.table.set_watermark(folders[-1].name)
-        return self.table.read(self.spark).count()
+        return self.apply_change_batch(df, folders[-1].name, is_backfill=True).table_rows
 
     # ---- sharded resumable backfill (B14 + B17) -----------------------------
     def backfill_sharded(self, backfill_id: str, num_shards: int = 4) -> int:
@@ -409,26 +398,15 @@ class StreamRunner:
             union = dfs[0]
             for d in dfs[1:]:
                 union = union.unionByName(d, allowMissingColumns=True)
-            # cross-shard dedup (same key may appear in several folders)
-            staged = latest_by_version(union, version_col=self.spec.version_column)
-            if self.spec.backfill_behavior == "Overwrite":
-                self.table.commit(self._drop_deletes(staged))
-            else:
-                self.table.commit(
-                    cdc_merge(
-                        self._target(),
-                        staged,
-                        version_col=self.spec.version_column,
-                        is_delete_col=self.spec.is_delete_column,
-                        allow_schema_evolution=not self.spec.is_unified_schema,
-                        dedup_staged=False,
-                    )
-                )
-        self.table.set_watermark(state["head"])
+            # the merge dedups across shards (a key may sit in several)
+            rows = self.apply_change_batch(union, state["head"], is_backfill=True).table_rows
+        else:
+            rows = 0
+            self.table.set_watermark(state["head"])
         # dispose (B12): drop staging + state after successful finalize
         shutil.rmtree(staging_root, ignore_errors=True)
         os.unlink(state_path)
-        return self.table.read(self.spark).count() if self.table.exists() else 0
+        return rows
 
     # ---- change capture (A1→B11 loop) ---------------------------------------
     def run_once(self) -> int:
@@ -464,7 +442,7 @@ class StreamRunner:
         self._deferred = False
         df = self.source.read_folders(self.spark, pending)
         if df is not None:
-            self._merge_folder_batch(df, pending[-1].name)
+            self.apply_change_batch(df, pending[-1].name)
         else:
             # no data for this entity — still advance the frontier
             self.table.set_watermark(pending[-1].name)
@@ -524,7 +502,7 @@ class StreamRunner:
                     if self.spec.max_buffer_rows <= 0 or nxt_rows <= self.spec.max_buffer_rows:
                         prefetch = executor.submit(_read_materialized, nxt)
                 if df is not None:
-                    self._merge_folder_batch(df, grp[-1].name)
+                    self.apply_change_batch(df, grp[-1].name)
                     if prefetched:
                         _release(df)  # drop the buffer's pinned blocks
                 else:

@@ -10,7 +10,8 @@ replace change-capture vs batch-backfill scheduling
 (crd-microsoft-synapse-link-beta.yaml execution backends).
 
 ``StreamRunner`` (runner.py) remains as the driver-side fallback loop the
-survey's M3 plan calls for; both share the same transform + merge chain.
+survey's M3 plan calls for; both apply batches through
+``StreamRunner.apply_change_batch``.
 
 Replay contract of the curation intake streams (dedup / decontaminate /
 media dedup / ANN fold-in / curation gate): every per-batch output is
@@ -35,7 +36,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.merge import cdc_merge
 from ..sources.stream import register
 from ..streaming.runner import StreamRunner, StreamSpec
 
@@ -358,11 +358,16 @@ def run_structured(
 
     ``available_now=True`` drains everything pending then stops (the test /
     cron-batch mode); ``False`` runs continuously at the change-capture
-    interval. Each micro-batch applies the same prepare→dedup→version-
-    guarded-merge chain as the batch runner, then commits a snapshot and
-    the sink-side watermark — merge idempotency makes replay of an
-    uncommitted batch a no-op (exactly-once, SURVEY.md §7 item 4).
+    interval. Each micro-batch goes through the batch runner's
+    ``apply_change_batch`` with the watermark at its end offset, which
+    Spark logs to ``<checkpoint>/offsets/<batch_id>`` before foreachBatch
+    runs — so the callback starts no action: only the commit job reads
+    the source. A micro-batch with no CSV for the entity (no partitions)
+    only advances the watermark, as ``run_once`` does. Merge idempotency
+    makes replay of an uncommitted batch a no-op (SURVEY.md §7 item 4).
     """
+    import json
+
     runner = StreamRunner(spark, spec)
     if spec.metrics_path:
         from .observability import jsonl_progress_listener
@@ -370,14 +375,12 @@ def run_structured(
         spark.streams.addListener(jsonl_progress_listener(spec.metrics_path))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        wm = batch_df.agg(F.max("_batch_folder")).first()[0]
-        runner._merge_folder_batch(
-            batch_df.drop("_batch_folder"), up_to_folder=wm or f"batch-{batch_id}"
-        )
+        with open(os.path.join(checkpoint_dir, "offsets", str(batch_id))) as fh:
+            up_to = json.loads(fh.read().splitlines()[-1])["folder"]
+        if batch_df.rdd.getNumPartitions() == 0:
+            runner.table.set_watermark(up_to)
+        else:
+            runner.apply_change_batch(batch_df.drop("_batch_folder"), up_to)
 
     writer = read_stream(spark, spec).writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -29,6 +29,31 @@ def _ids_and_versions(df):
     return {r["Id"]: r["versionnumber"] for r in df.select("Id", "versionnumber").collect()}
 
 
+def test_rows_merged_counts_rows_that_took_effect(spark, scenario, tmp_path):
+    """The per-batch metric line carries incoming rows and the rows that
+    passed the version guard: a tick made only of stale re-uploads of the
+    base file records rows=5, merged=0."""
+    import json
+
+    fx, spec = scenario
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    metrics = tmp_path / "metrics.jsonl"
+    runner = StreamRunner(spark, StreamSpec(**{**spec.__dict__, "metrics_path": str(metrics)}))
+    assert runner.backfill() == 5
+
+    fx.upload_batch(minus(minutes=15), update_changelog=True)  # stale re-upload only
+    assert runner.run_once() == 1
+    fx.upload_batch(minus(minutes=10), add_upsert=True, update_changelog=True)
+    assert runner.run_once() == 1
+    fx.upload_batch(minus(minutes=5), add_delete=True, update_changelog=True)
+    assert runner.run_once() == 1
+
+    lines = [json.loads(x) for x in open(metrics)]
+    # backfill: 5 inserts; stale tick; 1 update + 2 inserts; 1 delete
+    assert [(x["rows"], x["merged"]) for x in lines] == [(5, 5), (5, 0), (8, 3), (6, 1)]
+    assert runner.table.read(spark).count() == 6
+
+
 def test_backfill_then_stream(spark, scenario):
     fx, spec = scenario
     # two backfill folders with the same 5 keys; changelog at the newer one
@@ -156,6 +181,31 @@ def test_sharded_backfill_resumes_after_crash(spark, scenario, monkeypatch):
     assert not os.path.exists(
         os.path.join(spec.target_root, "_meta", "backfill_bf-1.json")
     )
+
+
+def test_sharded_backfill_finalize_retries(spark, scenario, monkeypatch):
+    """The backfillOnly retry mode covers the sharded backfill's finalize:
+    a commit that fails once is retried and the backfill completes."""
+    from arcane_stream_microsoft_synapse_link_spark.operators.retry import RetryPolicy
+
+    fx, spec = scenario
+    fx.upload_batch(minus(hours=2))
+    head = fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
+    retry = RetryPolicy(mode="backfillOnly", base_duration_s=0.0)
+    runner = StreamRunner(spark, StreamSpec(**{**spec.__dict__, "retry": retry}))
+    real_commit = VersionedTable.commit
+    fails = {"n": 1}
+
+    def flaky_commit(self, df, **kw):
+        if fails["n"]:
+            fails["n"] -= 1
+            raise RuntimeError("simulated commit conflict")
+        return real_commit(self, df, **kw)
+
+    monkeypatch.setattr(VersionedTable, "commit", flaky_commit)
+    assert runner.backfill_sharded("bf-retry", num_shards=2) == 7
+    assert fails["n"] == 0
+    assert runner.table.watermark() == head
 
 
 def test_bucketed_incremental_commit(spark, tmp_path):

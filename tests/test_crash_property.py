@@ -7,7 +7,7 @@ flow, then a fresh runner (the process-restart model) drains the source
 and the final state must equal the no-crash oracle state EVERY time, with
 the watermark at the frontier.
 
-The exactly-once argument under test (streaming/runner.py:_merge_folder_batch,
+The exactly-once argument under test (streaming/runner.py:apply_change_batch,
 the reference's StreamRunner.scala:198-233 ordering): commit-then-watermark
 means a crash anywhere before set_watermark replays the folder group, and
 the version-guarded merge makes the replay a no-op; a crash after

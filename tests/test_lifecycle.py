@@ -140,11 +140,12 @@ def test_jitter_deterministic_and_bounded(spark, tmp_path):
 def test_metrics_recorder(tmp_path):
     path = str(tmp_path / "m" / "metrics.jsonl")
     rec = MetricsRecorder(path, tags={"entity": "currency"})
-    rec.record("2024-01-01T00.00.00Z", rows=500, seconds=0.5)
-    rec.record("2024-01-01T00.05.00Z", rows=250, seconds=0.25)
+    rec.record("2024-01-01T00.00.00Z", rows=500, merged=500, seconds=0.5)
+    rec.record("2024-01-01T00.05.00Z", rows=250, merged=0, seconds=0.25)
     assert rec.total_rows == 750
     lines = [json.loads(x) for x in open(path)]
     assert lines[0]["rows_per_sec"] == 1000.0
+    assert [x["merged"] for x in lines] == [500, 0]
     assert lines[1]["tags"] == {"entity": "currency"}
 
 
@@ -212,11 +213,11 @@ def test_retry_applies_to_merge(spark, tmp_path, monkeypatch):
     real_commit = runner.table.commit
     fails = {"n": 2}
 
-    def flaky_commit(df):
+    def flaky_commit(df, **kw):
         if fails["n"] > 0:
             fails["n"] -= 1
             raise RuntimeError("simulated commit conflict")
-        return real_commit(df)
+        return real_commit(df, **kw)
 
     monkeypatch.setattr(runner.table, "commit", flaky_commit)
     assert runner.run_once() == 1

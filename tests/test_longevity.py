@@ -484,8 +484,8 @@ def test_pagerank_refresh_cost_curve_50_batches(spark, tmp_path):
     - job count per refresh is CONSTANT (same plan every time: fixed
       iterations, lineage truncated per round) — ±2 for AQE wiggle.
 
-    The measured curve lands in SCALE_PR_REFRESH.json and SCALE.md's
-    round-13 block."""
+    The measured curve is printed (and written to SCALE_PR_REFRESH.json
+    under the test's tmp dir); SCALE.md's round-13 block records it."""
     import json
     import time
 
@@ -554,7 +554,7 @@ def test_pagerank_refresh_cost_curve_50_batches(spark, tmp_path):
             }
         )
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(__file__)), "SCALE_PR_REFRESH.json"), "w") as fh:
+    with open(tmp_path / "SCALE_PR_REFRESH.json", "w") as fh:
         json.dump({"per_batch_edges": per_batch, "iterations": 3, "curve": curve}, fh, indent=1)
     print("pagerank refresh curve:", curve)
 

@@ -194,58 +194,84 @@ def test_arrow_and_tuple_read_paths_agree(scenario):
 
 def test_max_folders_per_trigger_caps_admission(spark, scenario):
     """B18 static shaper: a continuously-triggered stream with
-    maxFoldersPerTrigger=1 admits one folder per micro-batch (availableNow
-    drains are deliberately uncapped — the frontier is captured before
-    initialOffset). Same final state, work split across batches."""
+    maxFoldersPerTrigger=1 admits one folder per micro-batch once it runs
+    (a query's first trigger is uncapped: the reader has no start offset
+    before it). Each capped batch commits its own snapshot."""
     import time
 
+    from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
+
     fx, spec, ckpt = scenario
-    fx.upload_batch(minus(hours=3))
-    fx.upload_batch(minus(hours=2))
-    fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
-
-    from arcane_stream_microsoft_synapse_link_spark.sources.stream import register
-    from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner
-
-    register(spark)
-    runner = StreamRunner(spark, spec)
-
-    def merge_batch(batch_df, batch_id):
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        wm = batch_df.agg(F.max("_batch_folder")).first()[0]
-        runner._merge_folder_batch(batch_df.drop("_batch_folder"), up_to_folder=wm)
-
-    q = (
-        spark.readStream.format("synapse_link")
-        .option("path", spec.source_root)
-        .option("entity", spec.entity_name)
-        .option("maxFoldersPerTrigger", 1)
-        .load()
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="1 second")
-        .start()
+    first = fx.upload_batch(minus(hours=3), update_changelog=True)
+    spec = StreamSpec(
+        **{**spec.__dict__, "max_folders_per_tick": 1, "change_capture_interval_s": 1}
     )
-    try:
+    table = VersionedTable(spec.target_root)
+
+    def wait_for(folder):
         deadline = time.time() + 90
-        while time.time() < deadline and len(runner.stats.folders_seen) == 0:
-            # runner.folders_seen is unused on this path; poll table state
-            try:
-                if len(_state(spark, spec)) == 7 and runner.stats.batches_merged >= 2:
-                    break
-            except FileNotFoundError:
-                pass
-            time.sleep(1)
+        while time.time() < deadline and table.watermark() != folder:
+            time.sleep(0.5)
+        assert table.watermark() == folder
+
+    q = run_structured(spark, spec, ckpt, available_now=False)
+    try:
+        wait_for(first)
+        second = fx.upload_batch(minus(hours=2))
+        head = fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
+        wait_for(head)
     finally:
         q.stop()
     state = _state(spark, spec)
     assert len(state) == 7  # 5 base + 2 inserts
-    # admission capping split the drain into multiple micro-batches
-    # (exact batch count depends on commit-callback vs trigger timing)
-    assert runner.stats.batches_merged >= 2
+    # the two-folder backlog drained as two one-folder micro-batches
+    ends = [p["sources"][0]["endOffset"] for p in q.recentProgress if p["numInputRows"]]
+    assert len(ends) == 3
+    assert all(f in end for f, end in zip((first, second, head), ends))
+    assert table.current_version() == 3
+
+
+def test_entityless_micro_batch_advances_watermark(spark, scenario, tmp_path):
+    """A micro-batch whose folders hold no CSV for the entity moves the
+    sink watermark to its end folder without committing a snapshot — what
+    run_once does for an entity-less tick."""
+    from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
+
+    from .synapse_fixture import model_json
+
+    fx, spec, ckpt = scenario
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    run_structured(spark, spec, ckpt, available_now=True).awaitTermination(120)
+    table = VersionedTable(spec.target_root)
+    version = table.current_version()
+    assert version >= 1
+
+    empty = fx.folder_name(minus(minutes=5))
+    os.makedirs(tmp_path / "source" / empty)
+    (tmp_path / "source" / empty / "model.json").write_text(model_json())
+    fx.set_changelog(empty)
+    run_structured(spark, spec, ckpt, available_now=True).awaitTermination(120)
+
+    assert table.watermark() == empty
+    assert table.current_version() == version
+    assert len(_state(spark, spec)) == 5
+
+
+def test_drain_reads_source_once_per_micro_batch(spark, scenario):
+    """The foreachBatch body starts no action of its own: draining into an
+    empty target, the rows the source reports across the micro-batches
+    equal the rows in the source — one pass, the commit job's."""
+    fx, spec, ckpt = scenario
+    fx.upload_batch(minus(hours=2))
+    fx.upload_batch(minus(hours=1), add_upsert=True)
+    fx.upload_batch(minus(minutes=15), add_delete=True, update_changelog=True)
+    source_rows = 5 + (5 + 3) + (5 + 1)  # base file per folder, upsert, delete
+
+    q = run_structured(spark, spec, ckpt, available_now=True)
+    q.awaitTermination(120)
+
+    assert sum(p["numInputRows"] for p in q.recentProgress) == source_rows
+    assert len(_state(spark, spec)) == 5 - 1 + 2
 
 
 def test_analyze_stats(spark, scenario):

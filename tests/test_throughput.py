@@ -153,15 +153,16 @@ def test_graceful_stop_finishes_inflight_group(tmp_path, spark):
         change_capture_interval_s=0.01,
     )
     r = StreamRunner(spark, spec)
-    orig = r._merge_folder_batch
+    orig = r.apply_change_batch
     merged = []
 
     def merge_then_stop(df, up_to, **kw):
-        orig(df, up_to, **kw)  # in-flight group completes fully
+        out = orig(df, up_to, **kw)  # in-flight group completes fully
         merged.append(up_to)
         r.request_stop()  # SIGTERM lands mid-tick
+        return out
 
-    r._merge_folder_batch = merge_then_stop
+    r.apply_change_batch = merge_then_stop
     r.run(max_ticks=10, install_signal_handlers=False)
     # the grouped tick merged exactly the in-flight group then yielded;
     # watermark matches that group's frontier, remaining folders pending
