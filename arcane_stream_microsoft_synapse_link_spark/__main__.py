@@ -3,7 +3,10 @@
 Reference lifecycle (SURVEY.md §3.3): the operator renders a Job whose env
 carries ``STREAMCONTEXT__SPEC`` (+ BACKFILL toggles); the process runs
 either the change-capture loop or a backfill, exiting 0 on success, 2 on
-retryable failure (k8s podFailurePolicy restarts on 2 — main.scala:63-66).
+retryable failure (k8s podFailurePolicy restarts on 2 — main.scala:63-66)
+and 1 on a fatal one that a restart cannot fix: an invalid spec, a
+staged/target schema mismatch under ``isUnifiedSchema``, or a snapshot
+schema file in an unknown format.
 
 Usage:
     python -m arcane_stream_microsoft_synapse_link_spark --spec spec.json --target-root /lake/t1
@@ -36,17 +39,23 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from .config import spec_from_env, spec_from_json
+    from .operators.merge import SchemaMismatchError
     from .session import get_spark
     from .streaming.runner import StreamRunner
+    from .tables import SnapshotFormatError
 
-    if args.spec:
-        with open(args.spec) as fh:
-            spec = spec_from_json(fh.read(), target_root=args.target_root)
-        is_backfill, backfill_id = args.backfill, args.backfill_id
-    else:
-        spec, is_backfill, backfill_id = spec_from_env()
-        if args.backfill:
-            is_backfill = True
+    try:
+        if args.spec:
+            with open(args.spec) as fh:
+                spec = spec_from_json(fh.read(), target_root=args.target_root)
+            is_backfill, backfill_id = args.backfill, args.backfill_id
+        else:
+            spec, is_backfill, backfill_id = spec_from_env()
+            if args.backfill:
+                is_backfill = True
+    except (ValueError, KeyError) as e:
+        print(f"invalid stream spec: {e}", file=sys.stderr)
+        return 1  # fatal: a restart re-reads the same spec
 
     if args.set_state:
         # control-plane-only path: touch the state file a running stream
@@ -75,6 +84,9 @@ def main(argv: list[str] | None = None) -> int:
                 runner.backfill()
         else:
             runner.run(max_ticks=args.max_ticks)
+    except (SchemaMismatchError, SnapshotFormatError) as e:
+        print(f"stream failed (fatal): {e}", file=sys.stderr)
+        return 1  # fatal: the same data fails the same way after a restart
     except Exception as e:  # noqa: BLE001
         print(f"stream failed: {e}", file=sys.stderr)
         return 2  # retryable by the reference's podFailurePolicy contract

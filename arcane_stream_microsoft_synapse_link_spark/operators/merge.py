@@ -18,16 +18,22 @@ Stale re-uploads become no-ops ("merged without actual updates"). Shape:
     WHEN MATCHED AND staged.version > target.version THEN UPDATE *
     WHEN NOT MATCHED AND NOT staged.IsDelete THEN INSERT *
 
-Expressed Spark-first as equi-joins on the merge key:
+Expressed Spark-first as ONE full outer equi-join on the merge key:
 
-    effective  = staged ⟕ target(key, version) WHERE new-or-newer
-    survivors  = target ANTI-JOIN effective-keys
-    result     = survivors UNION (effective WHERE NOT IsDelete)
+    joined = target ⟗ latest_by_version(staged)
+    take   = staged present AND (target absent OR target.version IS NULL
+                                 OR staged.version > target.version)
+    result = CASE WHEN take THEN staged ELSE target END,
+             minus the taken deletes
 
 — the same logical plan a Delta/Iceberg copy-on-write ``MERGE INTO`` with
-those clauses lowers to. The staged side of a change batch is small
-(≤ rowsPerGroup), so AQE executes both joins as broadcasts: no full-table
-shuffle, and with merge-key bucketing on the target the join is co-located.
+those clauses lowers to. Each side is packed into one struct column, so
+the pick is a single ``CASE`` whatever the column count. The dedup
+window's hash exchange on the key already distributes the staged side the
+way the join needs it: the change batch is parsed and shuffled once, the
+target is scanned once and shuffled once on the key (a full outer join
+cannot broadcast). With merge-key bucketing the runner prunes the target
+to the touched buckets before the join.
 
 Idempotency: re-merging the same batch finds equal versions (guard fails)
 → no-op. Combined with commit-then-watermark ordering this is the
@@ -44,6 +50,12 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .dedup import latest_by_version
+from .transforms import quote_name
+
+
+class SchemaMismatchError(ValueError):
+    """``isUnifiedSchema``: the staged and target column sets differ. Fatal —
+    replaying the same batch fails the same way."""
 
 
 def _version_expr(df: DataFrame, version_col: str, fallback: str = "sysrowversion") -> Column | None:
@@ -59,7 +71,8 @@ def _version_expr(df: DataFrame, version_col: str, fallback: str = "sysrowversio
 
 
 def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Align schemas by name, adding missing columns as typed nulls (B10).
+    """Give both sides the same column set, adding missing columns as
+    typed nulls (B10); column order may still differ between them.
 
     Columns present on BOTH sides with different types are reconciled
     newest-schema-wins: the per-batch ``model.json`` is authoritative in
@@ -79,7 +92,7 @@ def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]
     for name, dtype in t_cols.items():
         if name not in s_cols:
             staged = staged.withColumn(name, F.lit(None).cast(dtype))
-    return target, staged.select(*target.columns)
+    return target, staged
 
 
 def cdc_merge(
@@ -100,8 +113,8 @@ def cdc_merge(
     mismatch is an error instead of an auto-ADD/null-fill.
 
     ``observation`` reports, as ``merged``, the count of rows that take
-    effect (the version-guarded rows; into no target, the inserts). The
-    action that executes the returned frame fills it."""
+    effect (the version-guarded rows, deletes included; into no target,
+    the inserts). The action that executes the returned frame fills it."""
     staged = latest_by_version(staged, key=key, version_col=version_col)
 
     is_delete = (
@@ -110,19 +123,19 @@ def cdc_merge(
         else F.lit(False)
     )
 
-    def observed(df: DataFrame) -> DataFrame:
+    def observed(df: DataFrame, merged: Column) -> DataFrame:
         if observation is None:
             return df
-        return df.observe(observation, F.count(F.lit(1)).alias("merged"))
+        return df.observe(observation, merged.alias("merged"))
 
     if target is None:
-        return observed(staged.where(~is_delete))
+        return observed(staged.where(~is_delete), F.count(F.lit(1)))
 
     if not allow_schema_evolution:
         t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
         s_names = {f.name for f in staged.schema.fields if not f.name.startswith("__")}
         if t_names != s_names:
-            raise ValueError(
+            raise SchemaMismatchError(
                 "isUnifiedSchema: staged/target schema mismatch "
                 f"(staging-only: {sorted(s_names - t_names)}, "
                 f"target-only: {sorted(t_names - s_names)})"
@@ -131,17 +144,23 @@ def cdc_merge(
 
     s_ver = _version_expr(staged, version_col)
     t_ver = _version_expr(target, version_col)
+    # one SQL-text struct per side, fields in the target's column order
+    row = F.expr(f"struct({', '.join(quote_name(c) for c in target.columns)})")
+    t_cols = [F.col(key), row.alias("__t")]
+    s_cols = [F.col(key), row.alias("__s"), is_delete.alias("__del")]
+    take = F.col("__s").isNotNull()
     if s_ver is not None and t_ver is not None:
-        tgt_versions = target.select(F.col(key).alias("__k"), t_ver.alias("__tgt_v"))
-        guarded = staged.join(
-            tgt_versions, staged[key] == tgt_versions["__k"], "left"
-        ).where(F.col("__tgt_v").isNull() | (s_ver > F.col("__tgt_v")))
-        effective = guarded.drop("__k", "__tgt_v")
-    else:
-        effective = staged  # no version columns → last-write-wins
-    effective = observed(effective)
-
-    upserts = effective.where(~is_delete)
-    touched_keys = effective.select(key)
-    survivors = target.join(touched_keys, on=key, how="left_anti")
-    return survivors.unionByName(upserts)
+        t_cols.append(t_ver.alias("__tv"))
+        s_cols.append(s_ver.alias("__sv"))
+        take = take & (
+            F.col("__t").isNull() | F.col("__tv").isNull() | (F.col("__sv") > F.col("__tv"))
+        )
+    # else no version columns → last-write-wins
+    take = F.coalesce(take, F.lit(False))
+    joined = target.select(*t_cols).join(staged.select(*s_cols), on=key, how="full_outer")
+    return (
+        observed(joined, F.count(F.when(take, 1)))
+        .where(~take | ~F.col("__del"))
+        .select(F.when(take, F.col("__s")).otherwise(F.col("__t")).alias("__r"))
+        .select("__r.*")
+    )

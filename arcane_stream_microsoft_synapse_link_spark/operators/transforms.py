@@ -19,6 +19,12 @@ ESSENTIAL_FIELDS = ("id", "versionnumber", "isdelete", "arcane_merge_key")
 _NORMALIZE_RE = re.compile(r"[^0-9a-zA-Z_]")
 
 
+def quote_name(name: str) -> str:
+    """Backtick-quote a column name for SQL text (raw CDM names, before
+    normalization, may hold ``$``, ``/``, spaces or backticks)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def normalize_column_names(df: DataFrame) -> DataFrame:
     """Strip special characters ($ / \\ ...) from field names (B2,
     reference docs/crd.md:186-187). Raises if two source names collapse

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.transforms import quote_name
+
 
 @dataclass(frozen=True)
 class CdmAttribute:
@@ -109,44 +111,66 @@ _TS_FORMATS = (
 )
 
 
+def _sql_literal(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _timestamp_sql(ref: str) -> str:
+    """SQL text of the forgiving multi-format timestamp parser over the
+    expression ``ref`` (see :func:`parse_timestamp`)."""
+    cleaned = f"nullif(trim({ref}), '')"
+    us12 = "regexp_replace({}, {}, {})".format(
+        cleaned, _sql_literal(r"^(\d{1,2}/\d{1,2}/\d{4}) 0:"), _sql_literal("$1 12:")
+    )
+    attempts = [f"try_to_timestamp({cleaned}, {_sql_literal(f)})" for f in _TS_FORMATS[:3]]
+    attempts.append(f"try_to_timestamp({us12}, {_sql_literal(_TS_FORMATS[3])})")
+    return f"coalesce({', '.join(attempts)})"
+
+
 def parse_timestamp(col: Column) -> Column:
     """Forgiving multi-format timestamp parser (watch-list item 1).
 
     The nonstandard ``1/1/2020 0:00:00 PM`` (hour 0 in a 12-hour clock)
     cannot parse under any strict pattern; we normalize hour 0 → 12 before
     the 12-hour attempt, treating "0:00:00 PM" as noon. Entirely JVM-side
-    (try_to_timestamp coalesce chain) — no Python in the hot path.
+    (try_to_timestamp coalesce chain) — no Python in the hot path. Built
+    from the same SQL text :func:`apply_schema` uses, applied to ``col``
+    as a SQL lambda over a one-element array.
     """
-    trimmed = F.trim(col)
-    cleaned = F.when(trimmed == "", None).otherwise(trimmed)
-    us12 = F.regexp_replace(cleaned, r"^(\d{1,2}/\d{1,2}/\d{4}) 0:", r"$1 12:")
-    attempts = [F.try_to_timestamp(cleaned, F.lit(f)) for f in _TS_FORMATS[:3]]
-    attempts.append(F.try_to_timestamp(us12, F.lit(_TS_FORMATS[3])))
-    return F.coalesce(*attempts)
+    parse = F.expr(f"v -> {_timestamp_sql('v')}")
+    return F.call_function("transform", F.array(col), parse)[0]
 
 
-def cast_attribute(col: Column, attr: CdmAttribute) -> Column:
+def _cast_sql(attr: CdmAttribute) -> str:
+    """SQL text casting the raw string column of ``attr`` to its CDM type."""
+    ref = quote_name(attr.name)
     dt = attr.data_type.lower()
-    empty_null = F.when(F.trim(col) == "", None).otherwise(col)
     if dt in ("datetime", "datetimeoffset"):
-        return parse_timestamp(col)
+        return _timestamp_sql(ref)
     if dt == "boolean":
-        return F.lower(F.trim(col)).try_cast("boolean")
+        return f"try_cast(lower(trim({ref})) AS BOOLEAN)"
     if dt in ("guid", "string"):
-        return col  # maxLength is metadata only — never truncate (SURVEY.md §1.2)
-    return empty_null.try_cast(attr.spark_type().simpleString())
+        return ref  # maxLength is metadata only — never truncate (SURVEY.md §1.2)
+    empty_null = f"CASE WHEN trim({ref}) = '' THEN NULL ELSE {ref} END"
+    return f"try_cast({empty_null} AS {attr.spark_type().simpleString()})"
 
 
 def apply_schema(df: DataFrame, entity: CdmEntity) -> DataFrame:
-    """Cast an all-string CSV DataFrame to the CDM-declared types (B3)."""
-    return df.select(*[cast_attribute(F.col(a.name), a).alias(a.name) for a in entity.attributes])
+    """Cast an all-string CSV DataFrame to the CDM-declared types (B3).
+
+    The whole projection is SQL text planned by one ``selectExpr`` call:
+    the same cast tree built from Column objects costs thousands of
+    Python→JVM round trips per read."""
+    return df.selectExpr(
+        *[f"{_cast_sql(a)} AS {quote_name(a.name)}" for a in entity.attributes]
+    )
 
 
 _CSV_OPTIONS = {"quote": '"', "escape": '"', "mode": "PERMISSIVE"}
 
 
 def _raw_schema_ddl(entity: CdmEntity) -> str:
-    return ", ".join(f"`{a.name}` STRING" for a in entity.attributes)
+    return ", ".join(f"{quote_name(a.name)} STRING" for a in entity.attributes)
 
 
 def paths_are_line_splittable(spark: SparkSession, paths: list[str] | str) -> bool:

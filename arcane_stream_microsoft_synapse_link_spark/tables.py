@@ -8,12 +8,21 @@ implements the same transactional contract on plain parquet:
       _meta/LATEST          # text: committed version number (atomic swap)
       _meta/watermark       # text: last merged batch folder (operator B11)
       v0000001/*.parquet    # immutable snapshot per commit
+      v0000001/_schema.json # {"format": "arcane-snapshot-schema/1",
+                            #  "schema": <Spark StructType JSON>}
 
 A commit writes a brand-new snapshot directory, then atomically replaces
 the pointer file (POSIX rename). Readers resolve the pointer once and only
 ever see complete snapshots — the same reader isolation Iceberg gives via
 its metadata pointer. Old snapshots remain for time travel until
 ``expire_snapshots`` (maintenance operator C2/C3) removes them.
+
+``_schema.json`` pins the snapshot's schema (every field nullable, layout
+partition columns included) the way Iceberg's metadata file does: a read
+hands it to Spark instead of inferring the schema from parquet footers,
+which would start a Spark job on every read. Spark's file index skips
+``_``-prefixed files, so it is never read as data. Snapshots written
+before the file existed are read with ``mergeSchema`` inference.
 
 On a production cluster this module is swapped for Iceberg/Delta
 (``MERGE INTO`` with the identical plan shape); every caller goes through
@@ -26,11 +35,21 @@ would rewrite — mirrored here by partitioning snapshots on a key bucket.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+SCHEMA_FILE = "_schema.json"
+SCHEMA_FORMAT = "arcane-snapshot-schema/1"
+
+
+class SnapshotFormatError(ValueError):
+    """A snapshot's ``_schema.json`` carries a format tag this reader does
+    not understand (written by a newer engine)."""
 
 
 class CommitConflictError(RuntimeError):
@@ -128,12 +147,31 @@ class VersionedTable:
                 f"table {self.root} has no committed snapshot v{v} (expired, in-flight, "
                 f"or never committed; available: {self.snapshots()})"
             )
-        # mergeSchema: incremental commits may leave older (hard-linked)
-        # bucket files on the pre-evolution schema; the union schema is the
-        # table schema (missing columns read null)
-        df = spark.read.option("mergeSchema", "true").parquet(self._snapshot_dir(v))
+        path = self._snapshot_dir(v)
+        schema = self._pinned_schema(path)
+        if schema is not None:
+            # incremental commits may leave older (hard-linked) bucket files
+            # on the pre-evolution schema; their missing columns read null
+            df = spark.read.schema(schema).parquet(path)
+        else:
+            # a snapshot from before schema pinning: infer the union schema
+            df = spark.read.option("mergeSchema", "true").parquet(path)
         # __p_* transform columns are derived layout, recomputed per commit
         return df.drop(*[c for c in df.columns if c.startswith("__p_")])
+
+    @staticmethod
+    def _pinned_schema(snapshot_dir: str) -> T.StructType | None:
+        try:
+            with open(os.path.join(snapshot_dir, SCHEMA_FILE)) as fh:
+                doc = json.load(fh)
+        except FileNotFoundError:
+            return None
+        if doc.get("format") != SCHEMA_FORMAT:
+            raise SnapshotFormatError(
+                f"{snapshot_dir}/{SCHEMA_FILE}: unknown snapshot schema format "
+                f"{doc.get('format')!r} (this reader understands {SCHEMA_FORMAT!r})"
+            )
+        return T.StructType.fromJson(doc["schema"])
 
     def snapshots(self) -> list[int]:
         """Versions currently readable: committed (at or below the pointer
@@ -311,7 +349,10 @@ class VersionedTable:
         version via exclusive file create BEFORE the expensive snapshot
         write; a second writer racing on the same base version gets
         :class:`CommitConflictError` immediately and must re-read + retry.
-        Claims left by crashed writers expire after ``claim_ttl_s``."""
+        Claims left by crashed writers expire after ``claim_ttl_s``.
+
+        The written frame's schema is pinned in the snapshot's
+        ``_schema.json`` before the pointer moves."""
         new_v = self.current_version() + 1
         self._claim_version(new_v)
         out = self._snapshot_dir(new_v)
@@ -346,6 +387,9 @@ class VersionedTable:
         if part_cols:
             w = w.partitionBy(*part_cols)
         w.parquet(out)
+        schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in df.schema])
+        with open(os.path.join(out, SCHEMA_FILE), "w") as fh:
+            json.dump({"format": SCHEMA_FORMAT, "schema": schema.jsonValue()}, fh)
 
         if bucketed and touched_buckets is not None and new_v > 1:
             prev = self._snapshot_dir(new_v - 1)
@@ -421,8 +465,6 @@ class VersionedTable:
         ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``). One
         distributed pass: count/min/max/null-count per column + HLL distinct
         for join-planning selectivity."""
-        import json
-
         df = self.read(spark)
         cols = columns or [f.name for f in df.schema.fields if not f.name.startswith("__")]
         aggs = [F.count(F.lit(1)).alias("__rows")]
@@ -444,8 +486,6 @@ class VersionedTable:
         return stats
 
     def stats(self) -> dict | None:
-        import json
-
         try:
             with open(os.path.join(self._meta, "stats.json")) as fh:
                 return json.loads(fh.read())
@@ -510,8 +550,6 @@ class VersionedTable:
         """Columns of the table's persisted z-order layout (set by
         :meth:`optimize_zorder`, consumed by :meth:`optimize`), or []
         when the table has never been z-clustered."""
-        import json
-
         try:
             with open(os.path.join(self._meta, "layout.json")) as fh:
                 return list(json.loads(fh.read()).get("zorder", []))
@@ -542,8 +580,6 @@ class VersionedTable:
         (``_meta/layout.json``, Iceberg's ``WRITE ORDERED BY`` table
         property analog) so later :meth:`optimize` compactions re-apply
         the same z-sort instead of reverting to ``sorted_by``."""
-        import json
-
         df = self.read(spark)
         self._write_atomic(
             os.path.join(self._meta, "layout.json"),

@@ -670,3 +670,43 @@ def test_multi_entity_per_entity_suspend_and_reload(spark, tmp_path):
 
     with _pytest.raises(KeyError, match="known targets"):
         m.suspend_entity(str(tmp_path / "nope"))
+
+
+def _jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the number
+    of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tick_job_count_guard(spark, scenario):
+    """A tick's fixed cost, in Spark jobs: one change tick into an existing
+    flat target (maintenance off) parses, deduplicates, merges and commits
+    in at most 3 jobs, and reading a snapshot starts none — its schema is
+    pinned in the snapshot, not inferred from parquet footers."""
+    import dataclasses
+
+    fx, spec = scenario
+    spec = dataclasses.replace(
+        spec, optimize_batch_threshold=10**6, analyze_batch_threshold=10**6
+    )
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    runner = StreamRunner(spark, spec)
+    assert runner.backfill() == 5
+
+    fx.upload_batch(minus(minutes=5), add_upsert=True, add_delete=True, update_changelog=True)
+    consumed, jobs = _jobs_of(spark, runner.run_once)
+    assert consumed == 1
+    assert jobs <= 3, f"tick ran {jobs} Spark jobs"
+
+    df, jobs = _jobs_of(spark, lambda: runner.table.read(spark))
+    assert jobs == 0, f"VersionedTable.read ran {jobs} Spark jobs"
+    assert df.count() == 5 - 1 + 2

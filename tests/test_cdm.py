@@ -239,8 +239,13 @@ def test_csv_line_splittable_fast_path(spark, tmp_path):
     """The splittable text+from_csv read must (a) engage on files whose
     records never span lines and parse identically to the multiLine read,
     (b) detect embedded-newline records via quote parity and decline, with
-    read_entity_csv falling back to multiLine transparently."""
+    read_entity_csv falling back to multiLine transparently, and (c) type
+    edge cells identically to the multiLine read: empty and whitespace-only
+    cells for every CDM type, padded booleans, the hour-0 PM wire format,
+    ISO-Z and offset timestamps, a decimal beyond its trait precision, and
+    a raw attribute name holding ``$``, ``/`` and a space."""
     import csv
+    from decimal import Decimal
 
     from arcane_stream_microsoft_synapse_link_spark.sources.cdm import (
         CdmAttribute,
@@ -278,3 +283,48 @@ def test_csv_line_splittable_fast_path(spark, tmp_path):
         tuple(r) for r in read_entity_csv(spark, str(nl), entity, line_splittable=True).collect()
     )
     assert got == [("1", "line1\nline2", 5), ("2", "plain", 6)]
+
+    # (c) CDM cast edge values
+    entity = CdmEntity(
+        name="edge",
+        attributes=(
+            CdmAttribute("Id", "guid"),
+            CdmAttribute("name", "string"),
+            CdmAttribute("cnt", "int64"),
+            CdmAttribute("small", "int32"),
+            CdmAttribute("amount", "decimal", precision=12, scale=3),
+            CdmAttribute("created", "dateTime"),
+            CdmAttribute("modified", "dateTimeOffset"),
+            CdmAttribute("flag", "boolean"),
+            CdmAttribute("ratio", "double"),
+            CdmAttribute("a$b /c", "int64"),
+        ),
+    )
+    lines = [
+        "k1,,,,,,,,,",
+        "k2, , , , , , , , , ",
+        'k3,x,42,7,12345.678,1/7/2021 0:04:05 PM,2021-03-04T05:06:07.0000000Z, TRUE ,1.5,9',
+        'k4,"y, z",-1,0,0.5,2021-03-04T05:06:07.0000000+02:00,0001-01-03T00:00:00.0000000,false,-2.25,',
+        "k5,w, 17 ,x,1234567890.5,1/7/2021 12:04:05 AM,not a date,maybe,1e3,-3",
+    ]
+    path = tmp_path / "edge.csv"
+    path.write_text("\n".join(lines) + "\n")
+    ts = dt.datetime
+    expect = [
+        ("k1", None, None, None, None, None, None, None, None, None),
+        ("k2", " ", None, None, None, None, None, None, None, None),
+        ("k3", "x", 42, 7, Decimal("12345.678"), ts(2021, 1, 7, 12, 4, 5),
+         ts(2021, 3, 4, 5, 6, 7), True, 1.5, 9),
+        ("k4", "y, z", -1, 0, Decimal("0.500"), ts(2021, 3, 4, 3, 6, 7),
+         ts(1, 1, 3, 0, 0), False, -2.25, None),
+        ("k5", "w", 17, None, None, ts(2021, 1, 7, 0, 4, 5), None, None, 1000.0, -3),
+    ]
+
+    fast = _read_line_splittable(spark, str(path), entity)
+    assert fast is not None
+    slow = read_entity_csv(spark, str(path), entity, line_splittable=False)
+    for df in (fast, slow):
+        assert df.columns == [a.name for a in entity.attributes]
+        assert df.schema["amount"].dataType == T.DecimalType(12, 3)
+        assert df.schema["a$b /c"].dataType == T.LongType()
+        assert sorted(tuple(r) for r in df.collect()) == expect

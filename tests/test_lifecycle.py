@@ -426,6 +426,123 @@ def test_time_travel_reads(spark, tmp_path):
         t.read(spark, version=99)
 
 
+def test_snapshot_schema_file_and_pre_pinning_fallback(spark, tmp_path):
+    """Each commit pins its schema in a format-tagged ``_schema.json``; a
+    snapshot without it (the layout before schema pinning) reads the same
+    rows and columns through parquet schema inference."""
+    import json as _json
+
+    from arcane_stream_microsoft_synapse_link_spark.tables import (
+        SCHEMA_FILE,
+        SCHEMA_FORMAT,
+        VersionedTable,
+    )
+
+    t = VersionedTable(str(tmp_path / "t"), bucket_count=4, bucket_key="k")
+    v = t.commit(spark.createDataFrame([(1, "a"), (2, None), (3, "c")], "k long, s string"))
+    path = tmp_path / "t" / f"v{v:07d}" / SCHEMA_FILE
+    doc = _json.loads(path.read_text())
+    assert doc["format"] == SCHEMA_FORMAT
+    assert [f["name"] for f in doc["schema"]["fields"]] == ["k", "s", "__bucket"]
+    assert all(f["nullable"] for f in doc["schema"]["fields"])
+
+    pinned = t.read(spark)
+    rows = sorted(tuple(r) for r in pinned.collect())
+    path.unlink()
+    inferred = t.read(spark)
+    assert inferred.schema == pinned.schema
+    assert sorted(tuple(r) for r in inferred.collect()) == rows
+
+
+def test_snapshot_schema_unknown_format_raises(spark, tmp_path):
+    import json as _json
+
+    import pytest as _pytest
+
+    from arcane_stream_microsoft_synapse_link_spark.tables import (
+        SCHEMA_FILE,
+        SnapshotFormatError,
+        VersionedTable,
+    )
+
+    t = VersionedTable(str(tmp_path / "t"))
+    v = t.commit(spark.createDataFrame([(1, "a")], "k long, s string"))
+    path = tmp_path / "t" / f"v{v:07d}" / SCHEMA_FILE
+    doc = _json.loads(path.read_text())
+    path.write_text(_json.dumps({**doc, "format": "arcane-snapshot-schema/99"}))
+    with _pytest.raises(SnapshotFormatError, match="arcane-snapshot-schema/99"):
+        t.read(spark)
+
+
+def _cli_spec(tmp_path, **staging) -> str:
+    from tests.synapse_fixture import ENTITY
+
+    doc = {
+        "source": {"configuration": {"entityName": ENTITY, "baseLocation": str(tmp_path / "src")}},
+        "staging": {"table": staging},
+    }
+    p = tmp_path / "spec.json"
+    p.write_text(json.dumps(doc))
+    return str(p)
+
+
+def test_cli_invalid_spec_exits_fatal(tmp_path, monkeypatch):
+    """A spec that cannot be parsed exits 1 (fatal: a pod restart re-reads
+    the same spec), from a file or from the environment."""
+    from arcane_stream_microsoft_synapse_link_spark.__main__ import main
+
+    bad = tmp_path / "bad.json"
+    bad.write_text("{not json")
+    assert main(["--spec", str(bad)]) == 1
+    monkeypatch.delenv("STREAMCONTEXT__SPEC", raising=False)
+    assert main([]) == 1
+
+
+def test_cli_unified_schema_mismatch_exits_fatal(spark, tmp_path):
+    """isUnifiedSchema + an evolved batch: the same batch fails the same way
+    after a restart, so the process exits 1, not the retryable 2."""
+    from datetime import datetime
+
+    from arcane_stream_microsoft_synapse_link_spark.__main__ import main
+    from tests.synapse_fixture import BASE_VERSION, KEYS, SynapseFixture
+
+    fx = SynapseFixture(tmp_path / "src")
+    fx.upload_batch(datetime(2021, 6, 1, 12, 0, 0), update_changelog=True)
+    spec = _cli_spec(tmp_path, isUnifiedSchema=True)
+    target = str(tmp_path / "tgt")
+    assert main(["--spec", spec, "--target-root", target, "--backfill"]) == 0
+    fx.upload_evolved_batch(
+        datetime(2021, 6, 1, 13, 0, 0),
+        key=KEYS[3],
+        version=BASE_VERSION + 400,
+        display="D-EVO",
+        extra_value="E9",
+        update_changelog=True,
+    )
+    assert main(["--spec", spec, "--target-root", target, "--max-ticks", "1"]) == 1
+
+
+def test_cli_runtime_failure_exits_retryable(spark, tmp_path, monkeypatch):
+    """Any other failure keeps exit code 2, which the reference's
+    podFailurePolicy restarts."""
+    from datetime import datetime
+
+    from arcane_stream_microsoft_synapse_link_spark.__main__ import main
+    from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
+    from tests.synapse_fixture import SynapseFixture
+
+    SynapseFixture(tmp_path / "src").upload_batch(
+        datetime(2021, 6, 1, 12, 0, 0), update_changelog=True
+    )
+
+    def failing_commit(self, df, **kw):
+        raise RuntimeError("simulated storage outage")
+
+    monkeypatch.setattr(VersionedTable, "commit", failing_commit)
+    spec = _cli_spec(tmp_path)
+    assert main(["--spec", spec, "--target-root", str(tmp_path / "tgt"), "--backfill"]) == 2
+
+
 def test_spec_parses_memory_bound_and_buffering():
     doc = dict(SPEC_DOC)
     doc["throughput"] = {

@@ -260,7 +260,8 @@ def test_entityless_micro_batch_advances_watermark(spark, scenario, tmp_path):
 def test_drain_reads_source_once_per_micro_batch(spark, scenario):
     """The foreachBatch body starts no action of its own: draining into an
     empty target, the rows the source reports across the micro-batches
-    equal the rows in the source — one pass, the commit job's."""
+    equal the rows in the source — one pass, the commit job's. A later
+    folder drained into the same, now non-empty, target is read once too."""
     fx, spec, ckpt = scenario
     fx.upload_batch(minus(hours=2))
     fx.upload_batch(minus(hours=1), add_upsert=True)
@@ -271,6 +272,14 @@ def test_drain_reads_source_once_per_micro_batch(spark, scenario):
     q.awaitTermination(120)
 
     assert sum(p["numInputRows"] for p in q.recentProgress) == source_rows
+    assert len(_state(spark, spec)) == 5 - 1 + 2
+
+    # into the now non-empty target: the merge joins the micro-batch once
+    fx.upload_batch(minus(minutes=5), add_upsert=True, include_base=False, update_changelog=True)
+    q = run_structured(spark, spec, ckpt, available_now=True)
+    q.awaitTermination(120)
+
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 3  # the upsert file
     assert len(_state(spark, spec)) == 5 - 1 + 2
 
 
