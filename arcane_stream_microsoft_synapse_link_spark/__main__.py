@@ -39,10 +39,9 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from .config import spec_from_env, spec_from_json
-    from .operators.merge import SchemaMismatchError
+    from .operators.retry import FatalError
     from .session import get_spark
     from .streaming.runner import StreamRunner
-    from .tables import SnapshotFormatError
 
     try:
         if args.spec:
@@ -84,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
                 runner.backfill()
         else:
             runner.run(max_ticks=args.max_ticks)
-    except (SchemaMismatchError, SnapshotFormatError) as e:
+    except FatalError as e:
         print(f"stream failed (fatal): {e}", file=sys.stderr)
         return 1  # fatal: the same data fails the same way after a restart
     except Exception as e:  # noqa: BLE001

@@ -211,6 +211,9 @@ def minhash_banded_np(
     import pandas as pd
     from pyspark.sql import types as T
 
+    if bands <= 0 or num_hashes % bands:
+        # checked here: the worker's reshape would fail mid-job instead
+        raise ValueError(f"num_hashes ({num_hashes}) must be a multiple of bands ({bands})")
     r = num_hashes // bands
     rng = np.random.RandomState(seed)
     A = rng.randint(1, 2**63 - 1, size=num_hashes, dtype=np.uint64) | np.uint64(1)

@@ -50,10 +50,11 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .dedup import latest_by_version
+from .retry import FatalError
 from .transforms import quote_name
 
 
-class SchemaMismatchError(ValueError):
+class SchemaMismatchError(FatalError, ValueError):
     """``isUnifiedSchema``: the staged and target column sets differ. Fatal —
     replaying the same batch fails the same way."""
 

@@ -12,7 +12,9 @@ concurrent-write message works the same way).
 
 Spark tasks already retry internally — this guards the job-level unit
 (merge + snapshot commit), which is safe to replay because the CDC merge
-is idempotent (dedup makes a re-merge a no-op).
+is idempotent (dedup makes a re-merge a no-op). A :class:`FatalError`
+is never retried, whatever the mode: replaying the same batch fails the
+same way.
 """
 
 from __future__ import annotations
@@ -23,6 +25,11 @@ from dataclasses import dataclass
 from typing import TypeVar
 
 T = TypeVar("T")
+
+
+class FatalError(Exception):
+    """A failure that a replay (or a process restart) cannot fix: the CLI
+    exits 1 on it and ``with_retry`` re-raises it on the first attempt."""
 
 
 @dataclass(frozen=True)
@@ -54,8 +61,8 @@ def with_retry(
     is_backfill: bool = False,
     sleep: Callable[[float], None] = time.sleep,
 ) -> T:
-    """Run ``fn``, retrying per policy. Non-matching errors, exhausted
-    attempts, and disabled modes re-raise the original exception."""
+    """Run ``fn``, retrying per policy. Fatal and non-matching errors,
+    exhausted attempts, and disabled modes re-raise the original exception."""
     attempt = 0
     while True:
         try:
@@ -63,7 +70,8 @@ def with_retry(
         except Exception as e:  # noqa: BLE001 — policy decides
             attempt += 1
             if (
-                not policy.applies(is_backfill)
+                isinstance(e, FatalError)
+                or not policy.applies(is_backfill)
                 or not policy.matches(e)
                 or attempt >= policy.max_attempts
             ):

@@ -141,18 +141,41 @@ class MetricsRecorder:
 
 
 def jsonl_progress_listener(path: str):
-    """StreamingQueryListener that appends every progress event (micro-batch
-    id, input rows, duration) to a JSONL file. Attach with
-    ``spark.streams.addListener(jsonl_progress_listener(path))``."""
+    """StreamingQueryListener that appends one query's progress events
+    (started, each micro-batch's id / input rows / ``durationMs``,
+    terminated) to a JSONL file.
+
+    Add it before ``start()`` so the started event is seen, then call
+    ``bind(spark.streams, query)`` with the started query: events that
+    arrive before the bind are held and written only if they are that
+    query's, other queries' events are dropped, and the listener removes
+    itself once its query terminates. A session that runs many queries
+    therefore carries no stale listeners and writes no stale files."""
+    import threading
+
     from pyspark.sql.streaming import StreamingQueryListener
 
     class _Listener(StreamingQueryListener):
+        def __init__(self):
+            # the listener bus's callback thread races the driver's bind
+            self._lock = threading.Lock()
+            self._query_id: str | None = None
+            self._streams = None
+            self._held: list[dict] = []
+
+        def bind(self, streams, query) -> None:
+            with self._lock:
+                self._query_id, self._streams = str(query.id), streams
+                for obj in self._held:
+                    self._write(obj)
+                self._held = []
+
         def onQueryStarted(self, event):
-            self._write({"event": "started", "id": str(event.id)})
+            self._emit({"event": "started", "id": str(event.id)})
 
         def onQueryProgress(self, event):
             p = event.progress
-            self._write(
+            self._emit(
                 {
                     "event": "progress",
                     "id": str(p.id),
@@ -163,14 +186,27 @@ def jsonl_progress_listener(path: str):
             )
 
         def onQueryTerminated(self, event):
-            self._write({"event": "terminated", "id": str(event.id)})
+            self._emit({"event": "terminated", "id": str(event.id)})
 
         def onQueryIdle(self, event):
             pass
 
-        def _write(self, obj: dict) -> None:
+        def _emit(self, obj: dict) -> None:
+            with self._lock:
+                if self._query_id is None:
+                    self._held.append(obj)
+                else:
+                    self._write(obj)
+
+        def _write(self, obj: dict) -> None:  # lock held
+            if obj["id"] != self._query_id:
+                return
             os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
             with open(path, "a") as fh:
                 fh.write(json.dumps(obj) + "\n")
+            if obj["event"] == "terminated":
+                # the JVM bus takes no lock to remove a listener, so this
+                # cannot wait on a callback that is waiting on ours
+                self._streams.removeListener(self)
 
     return _Listener()

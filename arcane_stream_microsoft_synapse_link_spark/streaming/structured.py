@@ -369,10 +369,6 @@ def run_structured(
     import json
 
     runner = StreamRunner(spark, spec)
-    if spec.metrics_path:
-        from .observability import jsonl_progress_listener
-
-        spark.streams.addListener(jsonl_progress_listener(spec.metrics_path))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         with open(os.path.join(checkpoint_dir, "offsets", str(batch_id))) as fh:
@@ -389,7 +385,19 @@ def run_structured(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=f"{int(spec.change_capture_interval_s)} seconds")
-    return writer.start()
+    if not spec.metrics_path:
+        return writer.start()
+    from .observability import jsonl_progress_listener
+
+    listener = jsonl_progress_listener(spec.metrics_path)
+    spark.streams.addListener(listener)
+    try:
+        query = writer.start()
+    except BaseException:
+        spark.streams.removeListener(listener)
+        raise
+    listener.bind(spark.streams, query)
+    return query
 
 
 def windowed_event_counts(

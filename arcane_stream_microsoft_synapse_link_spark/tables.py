@@ -43,11 +43,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators.retry import FatalError
+
 SCHEMA_FILE = "_schema.json"
 SCHEMA_FORMAT = "arcane-snapshot-schema/1"
 
 
-class SnapshotFormatError(ValueError):
+class SnapshotFormatError(FatalError, ValueError):
     """A snapshot's ``_schema.json`` carries a format tag this reader does
     not understand (written by a newer engine)."""
 

@@ -57,6 +57,22 @@ def test_minhash_finds_planted_pairs(planted):
     assert len(false_positives) == 0, false_positives
 
 
+def test_minhash_bands_must_divide_num_hashes(spark):
+    """A band count that does not divide ``num_hashes`` is refused on the
+    driver, before any Spark job, not by a reshape inside the worker."""
+    sc = spark.sparkContext
+    df = spark.range(4).selectExpr("id AS doc_id", "'a b c d' AS text")
+    sc.setJobGroup("minhash-bands-check", "no job expected")
+    try:
+        with pytest.raises(ValueError, match="multiple of bands"):
+            D.minhash_banded_np(df, num_hashes=128, bands=30)
+        with pytest.raises(ValueError, match="multiple of bands"):
+            D.lsh_candidate_pairs(df, num_hashes=10, bands=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("minhash-bands-check") == []
+
+
 def test_simhash_finds_planted_pairs(planted):
     df, pairs = planted
     found = {(r.id_a, r.id_b) for r in D.simhash_near_duplicates(df, max_hamming=10).collect()}

@@ -114,6 +114,35 @@ def test_retry_mode_gating():
     assert len(calls) == 5  # backfill: full attempts
 
 
+def test_retry_never_retries_fatal_errors():
+    """A fatal error is re-raised on the first attempt even under
+    ``always``; an ordinary failure still retries."""
+    from arcane_stream_microsoft_synapse_link_spark.operators.merge import SchemaMismatchError
+    from arcane_stream_microsoft_synapse_link_spark.tables import SnapshotFormatError
+
+    policy = RetryPolicy(mode="always", max_attempts=3, base_duration_s=0.0)
+    for error in (SchemaMismatchError("columns differ"), SnapshotFormatError("tag")):
+        calls = []
+
+        def fails(error=error):
+            calls.append(1)
+            raise error
+
+        with pytest.raises(type(error)):
+            with_retry(fails, policy, sleep=lambda s: None)
+        assert len(calls) == 1
+
+    calls = []
+
+    def transient():
+        calls.append(1)
+        raise RuntimeError("transient")
+
+    with pytest.raises(RuntimeError):
+        with_retry(transient, policy, sleep=lambda s: None)
+    assert len(calls) == 3
+
+
 def test_jitter_deterministic_and_bounded(spark, tmp_path):
     spec = StreamSpec(
         entity_name="e",
@@ -147,6 +176,54 @@ def test_metrics_recorder(tmp_path):
     assert lines[0]["rows_per_sec"] == 1000.0
     assert [x["merged"] for x in lines] == [500, 0]
     assert lines[1]["tags"] == {"entity": "currency"}
+
+
+def test_progress_listener_bind_races_the_bus(tmp_path):
+    """Event callbacks racing the driver's ``bind``: the bound query's
+    events are all written, once and in order, other queries' never, and
+    the listener removes itself exactly once, at its query's end."""
+    import sys
+    import threading
+    from types import SimpleNamespace as NS
+
+    from arcane_stream_microsoft_synapse_link_spark.streaming.observability import (
+        jsonl_progress_listener,
+    )
+
+    def bus(listener, qid, midway):
+        listener.onQueryStarted(NS(id=qid))
+        for b in range(200):
+            listener.onQueryProgress(NS(progress=NS(id=qid, batchId=b, numInputRows=1, durationMs={})))
+            if b == 50:
+                midway.set()
+        listener.onQueryTerminated(NS(id=qid))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for trial in range(10):
+            path = tmp_path / f"t{trial}" / "events.jsonl"
+            listener = jsonl_progress_listener(str(path))
+            removed = []
+            midway = threading.Event()
+            threads = [threading.Thread(target=bus, args=(listener, "mine", midway))]
+            threads += [
+                threading.Thread(target=bus, args=(listener, q, threading.Event())) for q in "abcde"
+            ]
+            for t in threads:
+                t.start()
+            assert midway.wait(timeout=30)  # bind while the bus still posts
+            listener.bind(NS(removeListener=removed.append), NS(id="mine"))
+            for t in threads:
+                t.join(timeout=30)
+                assert not t.is_alive()
+            events = [json.loads(x) for x in open(path)]
+            assert {e["id"] for e in events} == {"mine"}
+            assert [e["event"] for e in events] == ["started"] + ["progress"] * 200 + ["terminated"]
+            assert [e["batchId"] for e in events[1:-1]] == list(range(200))
+            assert removed == [listener]
+    finally:
+        sys.setswitchinterval(interval)
 
 
 def test_parse_duration():

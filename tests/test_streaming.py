@@ -283,6 +283,54 @@ def test_drain_reads_source_once_per_micro_batch(spark, scenario):
     assert len(_state(spark, spec)) == 5 - 1 + 2
 
 
+def test_progress_listener_bound_to_its_query(spark, tmp_path, monkeypatch):
+    """Two drains in one session with different metrics files: each file
+    holds only its own query's events, and each listener is removed once
+    its query terminates."""
+    import json
+    import time
+
+    from arcane_stream_microsoft_synapse_link_spark.streaming import observability
+
+    created = []
+
+    def make(path, _make=observability.jsonl_progress_listener):
+        created.append(_make(path))
+        return created[-1]
+
+    monkeypatch.setattr(observability, "jsonl_progress_listener", make)
+    ids = []
+    for name in ("a", "b"):
+        fx = SynapseFixture(tmp_path / name / "source")
+        fx.upload_batch(minus(hours=1), update_changelog=True)
+        spec = StreamSpec(
+            entity_name=ENTITY,
+            source_root=str(tmp_path / name / "source"),
+            target_root=str(tmp_path / name / "target"),
+            metrics_path=str(tmp_path / name / "metrics.jsonl"),
+        )
+        q = run_structured(spark, spec, str(tmp_path / name / "ckpt"), available_now=True)
+        q.awaitTermination(120)
+        ids.append((str(q.id), spec.metrics_path))
+    assert len(created) == 2
+
+    def registered():
+        jlisteners = list(spark.streams._jsqm.listListeners())
+        return [x for x in created if any(j.equals(x._jlistener) for j in jlisteners)]
+
+    deadline = time.time() + 60  # the listener bus is asynchronous
+    while registered() and time.time() < deadline:
+        time.sleep(0.2)
+    assert registered() == []
+    for qid, path in ids:
+        with open(path) as fh:  # shared with the runner's batch lines
+            events = [e for e in map(json.loads, fh) if "event" in e]
+        assert {e["id"] for e in events} == {qid}
+        kinds = [e["event"] for e in events]
+        assert kinds[0] == "started" and kinds[-1] == "terminated"
+        assert "progress" in kinds
+
+
 def test_analyze_stats(spark, scenario):
     fx, spec, _ = scenario
     fx.upload_batch(minus(hours=1), update_changelog=True)
